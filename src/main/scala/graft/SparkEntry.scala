@@ -7005,7 +7005,8 @@ object SparkEntry {
        |FROM agg""".stripMargin
 
   /** The q_closure_scale oracle: 18 unrolled star-contraction rounds
-    * (large-star then small-star, exactly DedupClusters' frame algebra)
+    * (large-star then small-star as separate phases, the textbook algebra
+    * whose edge sets DedupClusters' fused round reproduces every round)
     * over the planted chain, the fixpoint round index recomputed as
     * min{i : Eᵢ = Eᵢ₋₁}, and the component stats re-derived from the
     * replayed fixpoint edges. MATERIALIZED keeps DuckDB from inlining

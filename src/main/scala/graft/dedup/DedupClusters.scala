@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * (no driver-side graph state; the edge list never leaves executors).
   * For adversarial high-diameter graphs (long chains at the scale of the
   * corpus), [[componentsStarContraction]] (large-star/small-star)
-  * converges in O(log² n) rounds on the same join shape, and
+  * converges in O(log² n) rounds of three shuffles each, and
   * [[componentsAuto]] escalates from one to the other automatically.
   *
   * Every variant takes `checkpointDir`: `None` truncates per-round
@@ -145,7 +145,8 @@ object DedupClusters extends Logging {
     *  - small-star: every node points its smaller-or-equal neighbors
     *    (and itself) at m.
     *
-    * Each phase is one groupBy + one join on the (shrinking) edge list.
+    * One round applies both phases as three aggregations over the edge
+    * list ([[starRound]]) and is materialized by one checkpoint job.
     * At fixpoint the edge list IS the component map: (u → component
     * min) for every non-root u. Output matches [[components]] row for
     * row (roots carry comp = id). Throws when the fixpoint is not
@@ -157,85 +158,90 @@ object DedupClusters extends Logging {
                                 checkpointDir: Option[String] = None): DataFrame =
     starContractionCounted(pairs, maxIter, checkpointDir)._1
 
+  /** Row count and order-independent fingerprint (Σ xxhash64(u, v), 64-bit
+    * wraparound) of a distinct edge set: different tallies prove
+    * different sets; equal tallies prove nothing.
+    */
+  private[graft] final case class EdgeTally(rows: Long, fingerprint: Long)
+
+  /** [[truncate]] of an edge frame (columns u, v) that tallies the rows it
+    * materializes on the checkpoint job itself. The tally filter is the
+    * root of the plan, after the frame's last exchange, so it runs in the
+    * checkpoint job's RESULT stage, where Spark merges a task's
+    * accumulator updates once per partition and drops those of failed
+    * or retried attempts: the tally is exact, not an upper bound.
+    */
+  private[graft] def truncateTallied(edges: DataFrame,
+                                     checkpointDir: Option[String]): (DataFrame, EdgeTally) = {
+    val acc = edges.sparkSession.sparkContext.longAccumulator("dedup_star_tally")
+    val tally = udf { h: Long => acc.add(h); true }.asNondeterministic()
+    val out = truncate(edges.filter(tally(xxhash64(col("u"), col("v")))), checkpointDir)
+    (out, EdgeTally(acc.count, acc.sum))
+  }
+
+  /** One star-contraction round: the edge set of small-star(large-star(e))
+    * from three exchanges — two grouped aggregations and the final
+    * distinct.
+    *
+    * large-star groups the symmetrized edges by u and points every
+    * strictly-larger neighbor v at m = min(Γ(u) ∪ u). Its output is
+    * already oriented large→small (m ≤ u < v), so small-star's
+    * orientation is the identity: it groups by the new u, takes
+    * m2 = min(N⁻(u)), and points every member and u itself at m2.
+    */
+  private[graft] def starRound(edges: DataFrame): DataFrame = {
+    val large = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
+      .groupBy("u")
+      .agg(least(min("v"), col("u")).as("m"),
+        collect_set(when(col("v") > col("u"), col("v"))).as("up"))
+      .select(explode(col("up")).as("u"), col("m").as("v"))
+    large.groupBy("u")
+      .agg(min("v").as("m"), collect_set("v").as("down"))
+      .select(explode(concat(col("down"), array(col("u")))).as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+  }
+
   /** [[componentsStarContraction]] plus the number of contraction rounds
     * executed (including the final fixpoint-confirming round — the loop
-    * counts every `smallStar(largeStar(_))` application). Exposed for the
+    * counts every [[starRound]] application). Exposed for the
     * adversarial-scale gate, whose oracle replays the same rounds.
     */
   private[graft] def starContractionCounted(
       pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     setDir(pairs, checkpointDir)
-    val initial = truncate(pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .filter(col("u") =!= col("v")).distinct(), checkpointDir)
-    val vertices = truncate(initial.select(col("u").as("id"))
-      .unionByName(initial.select(col("v").as("id")))
-      .distinct(), checkpointDir)
-
-    // large-star: from each node's FULL (symmetrized) neighborhood,
-    // point every strictly-larger neighbor at m = min(Γ(u) ∪ u).
-    // TEXTBOOK form, restored in r20: the r19 "exchange trim" dropped
-    // adj's distinct (and smallStar's orientation+distinct below) as
-    // provably set-neutral — which they are — but the quiet interleaved
-    // fresh-JVM A/B (r20, 4 runs per variant, min AND median) measured
-    // the trimmed variant SLOWER on both closure rows (q_closure_scale
-    // 11.2 vs 10.1 s, q_geo_clusters 7.6 vs 7.5 s min-of-runs), agreeing
-    // with the driver's r19 numbers; the r19 −18% claim was ambient-load
-    // noise. The distincts shrink/normalize the frames feeding the
-    // aggregate+join, which at these shapes beats saving their
-    // exchanges.
-    def largeStar(e: DataFrame): DataFrame = {
-      val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-      val m = adj.groupBy("u").agg(least(min("v"), first("u")).as("m"))
-      adj.join(m, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-
-    // small-star: orient each edge from its larger endpoint, point the
-    // smaller neighbors AND the node itself at m = min(N⁻(u) ∪ u).
-    def smallStar(e: DataFrame): DataFrame = {
-      val oriented = e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v")).distinct()
-      val m = oriented.groupBy("u").agg(min("v").as("m"))
-      oriented.join(m, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionByName(m.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-    }
-
-    var edges = initial
-    var edgeCount = edges.count()
+    var (edges, tally) = truncateTallied(
+      pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
     var iter = 0
     var changed = true
     while (changed && iter < maxIter) {
-      val next = truncate(smallStar(largeStar(edges)), checkpointDir)
-      // fixpoint ⇔ identical edge sets (both are distinct). A differing
-      // COUNT already proves the sets differ — and the edge set shrinks
-      // on almost every contraction round — so the expensive
-      // symmetric-difference probe (full outer join) only runs on the
-      // final same-count rounds; every other round pays one cheap count
-      // of an already-persisted frame.
-      val nextCount = next.count()
-      changed = nextCount != edgeCount ||
+      val (next, nextTally) = truncateTallied(starRound(edges), checkpointDir)
+      // fixpoint ⇔ identical edge sets (both are distinct). Different
+      // tallies already prove the sets differ, so the exact
+      // symmetric-difference probe (a full outer join) runs only when
+      // the tallies match: on the fixpoint round, or on a fingerprint
+      // collision, which can cost a probe but never end the loop early.
+      changed = nextTally != tally ||
         next.withColumn("__n", lit(1))
           .join(edges.withColumn("__e", lit(1)), Seq("u", "v"), "full_outer")
           .filter(col("__n").isNull || col("__e").isNull)
           .head(1).nonEmpty
       edges = next
-      edgeCount = nextCount
+      tally = nextTally
       iter += 1
     }
     if (changed) throw new IllegalStateException(
       s"DedupClusters.componentsStarContraction did not converge within " +
         s"maxIter=$maxIter rounds; labels would be wrong. Raise maxIter.")
     // fixpoint stars: every non-root points at exactly its component's
-    // min (roots carry no outgoing edge — their self-loop dropped).
-    val labels = edges.groupBy("u").agg(min("v").as("comp"))
-      .select(col("u").as("id"), col("comp"))
-    (vertices.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp")), iter)
+    // min. A round keeps every input vertex on an edge and orients every
+    // edge large→small, so each vertex is labeled by the min of its
+    // targets, or by itself when it has none (the roots).
+    val labels = edges.select(col("u").as("id"), col("v").as("comp"))
+      .unionByName(edges.select(col("v").as("id"), col("v").as("comp")))
+      .groupBy("id").agg(min("comp").as("comp"))
+    (labels, iter)
   }
 
   /** Auto-selecting entry point: run min-label + pointer-jump for up to
@@ -244,7 +250,7 @@ object DedupClusters extends Logging {
     * fixpoint is not reached — the budget doubling as the diameter
     * heuristic: a graph that hasn't converged in b pointer-jumping
     * rounds has effective diameter ≳ 2^b, exactly star contraction's
-    * target class. Both phases are equi-join rounds over the edge list;
+    * target class. Both phases are shuffle rounds over the edge list;
     * the escalation wastes only the budgeted rounds.
     */
   def componentsAuto(pairs: DataFrame, propagationBudget: Int = 8,

@@ -299,14 +299,13 @@ class DedupSpec extends SparkSpec {
     graft.CachePool.releaseAll()
   }
 
-  test("exchange-trimmed star rounds replay the textbook large/small-star fixpoint") {
-    // r19: largeStar dropped the pre-aggregation distinct and smallStar
-    // dropped the identity orientation+distinct — both pure exchange
-    // savings. This pin drives the TEXTBOOK form (with both distincts
-    // and the orientation) over in-memory sets and requires the engine
-    // to reach the fixpoint in EXACTLY the same number of rounds — the
-    // value q_closure_scale's oracle replays — on a high-diameter chain
-    // and on a mixed fixture.
+  test("fused star rounds match the textbook large/small-star edge set every round") {
+    // The textbook phases (Kiveris et al.) over in-memory sets — the
+    // algebra q_closure_scale's oracle replays. The engine's single round
+    // runs on its own previous output and must produce the reference's
+    // edge set in EVERY round, not only reach its fixpoint in the same
+    // number of rounds; the full loop must then count the same rounds
+    // and label every vertex with the reference fixpoint's stars.
     def largeStarRef(e: Set[(Long, Long)]): Set[(Long, Long)] = {
       val adj = e ++ e.map(p => (p._2, p._1))
       val m = adj.groupBy(_._1).map { case (u, es) =>
@@ -320,31 +319,83 @@ class DedupSpec extends SparkSpec {
       (oriented.map { case (u, v) => (v, m(u)) } ++ m.toSet)
         .filter(p => p._1 != p._2)
     }
-    def refRounds(pairs: Set[(Long, Long)]): Int = {
-      var edges = pairs.filter(p => p._1 != p._2)
-      var iter = 0
+    def check(pairs: Seq[(Long, Long)]): Unit = {
+      var ref = pairs.filter(p => p._1 != p._2).toSet
+      val vertices = ref.flatMap(p => Seq(p._1, p._2))
+      var engine = ref
+      var rounds = 0
       var changed = true
-      while (changed && iter < 50) {
-        val next = smallStarRef(largeStarRef(edges))
-        changed = next != edges
-        edges = next
-        iter += 1
+      while (changed && rounds < 50) {
+        val next = smallStarRef(largeStarRef(ref))
+        val got = DedupClusters.starRound(engine.toSeq.toDF("u", "v"))
+          .as[(Long, Long)].collect()
+        rounds += 1
+        assert(got.length === got.toSet.size, s"round $rounds emitted duplicate edges")
+        assert(got.toSet === next, s"round $rounds diverged on pairs $pairs")
+        changed = next != ref
+        ref = next
+        engine = got.toSet
       }
       assert(!changed, "reference did not converge")
-      iter
+      val (labels, engineRounds) = DedupClusters.starContractionCounted(
+        pairs.toDF("id_a", "id_b"))
+      assert(engineRounds === rounds, s"engine rounds diverged on pairs $pairs")
+      val refLabels = vertices.map(x => x -> ref.collect { case (`x`, c) => c }
+        .foldLeft(x)(math.min))
+      assert(labels.as[(Long, Long)].collect().toSet === refLabels)
     }
+
     val chain = (0L until 80L).map(i => (i, i + 1))
     val fixture = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L),
       (20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L))
-    Seq(chain, fixture).foreach { ps =>
-      val (_, engineRounds) = DedupClusters.starContractionCounted(
-        ps.toDF("id_a", "id_b"))
-      assert(engineRounds === refRounds(ps.toSet),
-        s"engine rounds diverged from the textbook fixpoint on ${ps.size} edges")
-    }
+    Seq(chain, fixture, Seq.empty, Seq((5L, 5L))).foreach(check)
+
+    import org.scalacheck.{Gen, Prop, Test}
+    val vertex = Gen.choose(0L, 40L)
+    val piece = Gen.frequency(
+      4 -> Gen.zip(vertex, vertex).map(Seq(_)), // self-loops included
+      1 -> (for (k <- Gen.choose(3, 6); b <- vertex) // cliques
+        yield for (i <- 0L until k; j <- i + 1 until k) yield (b + i, b + j)),
+      1 -> Gen.choose(0L, 50L).map(i => Seq((1000L + 2 * i, 1001L + 2 * i)))) // isolated pairs
+    val graphs = for {
+      ps <- Gen.resize(15, Gen.listOf(piece)).map(_.flatten) // empty included
+      again <- Gen.someOf(ps)
+      flipped <- Gen.someOf(ps)
+    } yield ps ++ again ++ flipped.map(_.swap) // duplicate and reversed pairs
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(10).withWorkers(1)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261017L)),
+      Prop.forAllNoShrink(graphs) { ps => check(ps); true })
     graft.CachePool.releaseAll()
+    assert(result.passed, result.status.toString)
+  }
+
+  test("star-contraction tallies are exact under result-task retries") {
+    // A task-retry budget is fixed when the SparkContext starts, so the
+    // probe runs on its own local[4,3] JVM: first attempts of result
+    // tasks fail in the stage that tallies a round's edges.
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ jvm ++ Seq(
+      "-Dspark.ui.enabled=false", "-cp", sys.props("java.class.path"),
+      "graft.dedup.StarRetryProbe")
+    val log, err = new StringBuilder
+    val exit = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      line => log.append(line).append('\n'), line => err.append(line).append('\n')))
+    assert(exit === 0, s"probe failed:\n$log${err.takeRight(4000)}")
+    val got = log.toString.linesIterator.collect {
+      case l if l.contains('=') => l.split("=", 2) match { case Array(k, v) => k -> v }
+    }.toMap
+    def long(key: String): Long = got.getOrElse(key, fail(s"probe printed no $key:\n$log")).toLong
+    assert(long("tally_failed_tasks") > 0, "no tally task was retried")
+    assert(long("tally_rows") === long("exact_rows"))
+    assert(long("tally_fingerprint") === long("exact_fingerprint"))
+    assert(long("star_failed_tasks") > 0 && long("components_failed_tasks") > 0)
+    assert(got.get("star_same_labels").contains("true"))
+    assert(long("star_rounds") === long("star_clean_rounds"))
+    assert(got.get("components_same_labels").contains("true"))
   }
 
   test("reliable checkpointing yields identical components to localCheckpoint") {
