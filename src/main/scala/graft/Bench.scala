@@ -1,39 +1,18 @@
 package graft
-import java.util.concurrent.{Callable, Executors, TimeUnit, TimeoutException}
-
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // optional comma-separated subset for focused local timing; absent or
-    // blank → the full suite (the driver's contract is unchanged). The
-    // warmup pass below also runs over this subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names unknown queries: " +
-        unknown.toSeq.sorted.mkString(", "))
-    }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    // optional subset for focused local timing; the warmup pass below
+    // also runs over this subset.
+    val only = QueryGuard.only(sys.env.get("SPARK_GRAFT_ONLY"))
+    val selected = QueryGuard.select(only)
 
     // Untimed warmup: one pass over every SELECTED query at the smallest sibling
     // scale, so the timed pass measures steady-state engine throughput
@@ -81,55 +60,7 @@ object Bench {
     // startup has itself raised the load. Empty when launched by hand.
     val loadAtLaunch = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_AT_LAUNCH", "")
     val loadBefore = loadavg()
-    // A timed-out query's worker may keep submitting jobs (cancelJobGroup
-    // kills only ACTIVE jobs) and re-registering persists; re-cancel and
-    // re-release its group each iteration so it cannot pollute later
-    // timings or pin memory.
-    val staleGroups = scala.collection.mutable.ArrayBuffer.empty[String]
-    // One timed attempt; returns (seconds, timedOut).
-    def attempt(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                round: Int): (Double, Boolean) = {
-      staleGroups.foreach { g =>
-        spark.sparkContext.cancelJobGroup(g)
-        CachePool.releaseGroup(g)
-      }
-      spark.catalog.clearCache()
-      val group = s"bench-$name-$round"
-      // Dedicated single-thread executor per query: on timeout the worker
-      // thread is INTERRUPTED (not abandoned into a shared pool), so
-      // runaway queries can neither exhaust a global executor nor keep
-      // burning CPU unchecked during later iterations.
-      val exec = Executors.newSingleThreadExecutor { r =>
-        val t = new Thread(r, group); t.setDaemon(true); t
-      }
-      val t0 = System.nanoTime()
-      var timedOut = false
-      val work = exec.submit(new Callable[Unit] {
-        def call(): Unit = {
-          // job groups are thread-local: set on the thread that builds the
-          // plan AND submits the jobs, so CachePool registrations and job
-          // cancellation both key on this query's group.
-          spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-          try noop(fn(spark, sfDir))
-          finally spark.sparkContext.clearJobGroup()
-        }
-      })
-      try {
-        work.get(timeoutSec, TimeUnit.SECONDS)
-        CachePool.releaseGroup(group)
-      } catch {
-        case _: TimeoutException =>
-          work.cancel(true)
-          spark.sparkContext.cancelJobGroup(group)
-          staleGroups += group
-          timedOut = true
-          System.err.println(s"[bench] $name timed out after ${timeoutSec}s")
-        case e: Throwable =>
-          CachePool.releaseGroup(group)
-          System.err.println(s"[bench] $name: ${e.getMessage}")
-      } finally exec.shutdownNow()
-      ((System.nanoTime() - t0) / 1e9, timedOut)
-    }
+    val guard = new QueryGuard(spark, timeoutSec, "bench")
     val results = selected.map { case (name, fn) =>
       // min-of-N: immune to a transient co-tenant burst hitting one
       // attempt. A timed-out query is not retried — its cancelled jobs
@@ -138,9 +69,9 @@ object Bench {
       var r = 0
       var stop = false
       while (r < repeats && !stop) {
-        val (sec, timedOut) = attempt(name, fn, r)
-        best = math.min(best, sec)
-        stop = timedOut
+        val outcome = guard.run(name, s"bench-$name-$r")(noop(fn(spark, sfDir)))
+        best = math.min(best, outcome.seconds)
+        stop = outcome.isInstanceOf[QueryGuard.Timeout]
         r += 1
       }
       name -> best

@@ -11,8 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** Local session for tests / bench. On a real cluster the same configs
-    * apply, minus `master`; shuffle partitions scale with cluster cores.
+  /** The one local session: `Bench`, `Verify`, `PlanDump`, the tests and
+    * the benchmark all run on these configs, so the plans that are tested
+    * are the plans that are graded and timed. The only place in the
+    * program that builds a SparkSession (`SparkEntryContractSpec` pins
+    * it). On a real cluster the same configs apply, minus `master`;
+    * shuffle partitions scale with cluster cores.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession

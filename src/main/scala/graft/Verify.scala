@@ -1,8 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{Callable, Executors, TimeUnit, TimeoutException}
-
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,82 +7,23 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Per-query timeout: one pathological query must not eat the whole
-    // correctness gate. On timeout the worker thread is interrupted, its
-    // job group cancelled, and the loop moves on (that query alone
-    // reports as failed).
+    // correctness gate; a timed-out query alone reports as failed.
     val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "300").toLong
-    // Groups whose query timed out: their workers may survive the
-    // interrupt long enough to submit more jobs or re-register persists.
-    // Re-cancel and re-release at every iteration to contain them.
-    val staleGroups = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Local-iteration filter, mirroring Bench: SPARK_GRAFT_ONLY is a
-    // comma-list of query keys; absent or blank → full suite (the driver
-    // contract is unchanged — the driver never sets it).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.trim).filter(_.nonEmpty)
-      .map(_.split(',').map(_.trim).toSet)
-    val selected = only match {
-      case Some(keys) =>
-        val unknown = keys -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, "SPARK_GRAFT_ONLY names unknown queries: " +
-          unknown.toSeq.sorted.mkString(", "))
-        SparkEntry.queries.view.filterKeys(keys).toMap
-      case None => SparkEntry.queries
-    }
-    val statuses = scala.collection.mutable.SortedMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
-      staleGroups.foreach { g =>
-        spark.sparkContext.cancelJobGroup(g)
-        CachePool.releaseGroup(g)
+    val guard = new QueryGuard(spark, timeoutSec, "verify")
+    // local-iteration subset, as in Bench
+    val selected = QueryGuard.select(QueryGuard.only(sys.env.get("SPARK_GRAFT_ONLY")))
+    val statuses = selected.map { case (name, fn) =>
+      val outcome = guard.run(name, s"verify-$name") {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      val group = s"verify-$name"
-      val exec = Executors.newSingleThreadExecutor { r =>
-        val t = new Thread(r, group); t.setDaemon(true); t
-      }
-      val work = exec.submit(new Callable[Unit] {
-        def call(): Unit = {
-          // job groups are THREAD-local: set on the thread that builds the
-          // plan and submits the jobs, so CachePool registrations and job
-          // cancellation both key on this query's group.
-          spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          finally spark.sparkContext.clearJobGroup()
-        }
+      name -> (outcome match {
+        case _: QueryGuard.Ok => "ok"
+        case _: QueryGuard.Timeout => s"timeout after ${timeoutSec}s"
+        case QueryGuard.Error(_, msg) => s"error: $msg"
       })
-      try {
-        work.get(timeoutSec, TimeUnit.SECONDS)
-        CachePool.releaseGroup(group)
-        statuses(name) = "ok"
-      } catch {
-        case _: TimeoutException =>
-          work.cancel(true)
-          spark.sparkContext.cancelJobGroup(group)
-          staleGroups += group
-          statuses(name) = s"timeout after ${timeoutSec}s"
-          System.err.println(s"[verify] $name timed out after ${timeoutSec}s")
-        case e: Throwable =>
-          CachePool.releaseGroup(group)
-          statuses(name) = s"error: ${e.getMessage}"
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally {
-        exec.shutdownNow()
-        // group-scoped release above drops this query's persists without
-        // touching a still-running stale query's frames; the cache clear
-        // keeps every query's correctness run cold.
-        spark.catalog.clearCache()
-      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

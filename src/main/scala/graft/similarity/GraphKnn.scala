@@ -111,8 +111,9 @@ object GraphKnn {
     // every round's logical plan nested inside the next one's — the
     // final frame's plan ran to tens of thousands of nodes (24k lines at
     // sf0.001, plans/r20) and driver-side analysis of that tree per
-    // action dominated the serve (JobProfile r20: more time between
-    // jobs than in them). With a LogicalRDD leaf per round the plan
+    // action dominated the serve (r20's per-job timeline, the view
+    // `perfbench/run.py --trace 1` gives today: more time between jobs
+    // than in them). With a LogicalRDD leaf per round the plan
     // stays shallow and the per-round barrier pays for itself — the r16
     // measurement that rejected per-round materialization used count()
     // WITH persist (extra action, still-deep plans), not checkpoint.

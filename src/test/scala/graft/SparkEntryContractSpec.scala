@@ -38,8 +38,28 @@ class SparkEntryContractSpec extends AnyFunSuite {
 
   test("surface size and naming are pinned") {
     assert(SparkEntry.queries.size === 244,
-      "query count changed — update this pin AND SURVEY.md/EXPLAIN.md together")
+      "query count changed — update this pin AND SURVEY.md together")
     val badNames = SparkEntry.queries.keySet.filterNot(_.matches("q_[a-z0-9_]+"))
     assert(badNames.isEmpty, s"non-conforming query names: $badNames")
+  }
+
+  test("only GraftSession builds a SparkSession") {
+    // one harness session: a second builder drifts from the configs the
+    // tests and the benchmark run on (it did: Bench and Verify once ran
+    // a 10 MB broadcast threshold against GraftSession's 64 MB)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources under $root")
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val st = java.nio.file.Files.walk(root)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => builder.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+        .map(p => root.relativize(p).toString)
+        .toSeq.sorted
+    } finally st.close()
+    assert(offenders === Seq("graft/GraftSession.scala"),
+      "SparkSession.builder outside GraftSession.scala — use GraftSession.local")
   }
 }
