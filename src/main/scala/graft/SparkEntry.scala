@@ -2426,13 +2426,13 @@ object SparkEntry {
         .select((col("doc_id") - 1).as("id_a"), col("doc_id").as("id_b"))
       val (labels, escalated, rounds) = graft.dedup.DedupClusters
         .componentsAutoCounted(chain, propagationBudget = 4)
-      val lab = graft.CachePool.persist(labels)
-      lab.agg(count(lit(1)).as("n_vertices"),
-          count_distinct(col("comp")).as("n_components"),
-          sum("comp").as("sum_labels"))
+      // every statistic from one pass over the cluster sizes
+      labels.groupBy("comp").agg(count(lit(1)).as("cs"))
+        .agg(coalesce(sum("cs"), lit(0L)).as("n_vertices"),
+          count(lit(1)).as("n_components"),
+          sum(col("comp") * col("cs")).as("sum_labels"),
+          max("cs").as("max_cluster"))
         .crossJoin(broadcast(chain.agg(count(lit(1)).as("n_edges"))))
-        .crossJoin(broadcast(lab.groupBy("comp").agg(count(lit(1)).as("cs"))
-          .agg(max("cs").as("max_cluster"))))
         .select(col("n_vertices"), col("n_edges"), col("n_components"),
           col("sum_labels"), col("max_cluster"),
           lit(escalated).as("escalated"),

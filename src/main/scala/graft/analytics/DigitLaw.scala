@@ -59,7 +59,9 @@ object DigitLaw {
         struct(lit(d).as("digit"), lit(p).as("expected_ppm"))
       }: _*)).as("x"))
       .select("x.*")
-    val joined = broadcast(expected).join(digits, Seq("digit"), "left")
+    // the preserved side of a left join cannot be its broadcast side:
+    // hint the (≤ 9-row) observed digits instead
+    val joined = expected.join(broadcast(digits), Seq("digit"), "left")
       .select(col("digit"), coalesce(col("observed"), lit(0L)).as("observed"),
         col("expected_ppm"))
     val n = joined.agg(sum("observed").as("n"))

@@ -46,8 +46,10 @@ object LinkGraph {
     checkpointDir.foreach(links.sparkSession.sparkContext.setCheckpointDir)
     def truncate(df: DataFrame): DataFrame = checkpointDir match {
       case Some(_) => df.checkpoint(eager = true)
-      case None    => df.localCheckpoint(eager = true)
+      case None    => graft.CachePool.pinCheckpoint(df)
     }
+    def release(df: DataFrame): Unit =
+      if (checkpointDir.isEmpty) graft.CachePool.releaseCheckpoint(df)
     val spark = links.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // one pass: parallel links collapse to integer weights; partitioned by
@@ -67,12 +69,16 @@ object LinkGraph {
         .select(col("src"), expr("rank div ow").as("q"))
       val sums = wedges.join(quo, "src")
         .groupBy("dst").agg(sum(col("q") * col("w")).as("csum"))
-      ranks = truncate(verts
+      val next = truncate(verts
         .join(sums, verts("id") === sums("dst"), "left")
         .select(col("id"),
           (lit(base) + expr(s"($dampNum * coalesce(csum, 0L)) div $dampDen"))
             .as("rank")))
+      release(ranks) // superseded: the next round reads only `next`
+      ranks = next
     }
+    // the returned ranks are a checkpoint of their own: nothing reads these
+    Seq(wedges, verts, outw).foreach(release)
     ranks
   }
 

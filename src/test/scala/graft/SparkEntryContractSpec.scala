@@ -43,23 +43,34 @@ class SparkEntryContractSpec extends AnyFunSuite {
     assert(badNames.isEmpty, s"non-conforming query names: $badNames")
   }
 
+  /** Main source files (relative to `src/main/scala`) that match `re`. */
+  private def sourcesMatching(re: scala.util.matching.Regex): Seq[String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources under $root")
+    val st = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => re.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
+        .map(p => root.relativize(p).toString)
+        .toSeq.sorted
+    } finally st.close()
+  }
+
   test("only GraftSession builds a SparkSession") {
     // one harness session: a second builder drifts from the configs the
     // tests and the benchmark run on (it did: Bench and Verify once ran
     // a 10 MB broadcast threshold against GraftSession's 64 MB)
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"no sources under $root")
-    val builder = """SparkSession\s*\.\s*builder""".r
-    val st = java.nio.file.Files.walk(root)
-    val offenders = try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => builder.findFirstIn(java.nio.file.Files.readString(p)).isDefined)
-        .map(p => root.relativize(p).toString)
-        .toSeq.sorted
-    } finally st.close()
-    assert(offenders === Seq("graft/GraftSession.scala"),
+    assert(sourcesMatching("""SparkSession\s*\.\s*builder""".r) === Seq("graft/GraftSession.scala"),
       "SparkSession.builder outside GraftSession.scala — use GraftSession.local")
+  }
+
+  test("only CachePool takes a local checkpoint") {
+    // a bare localCheckpoint's blocks escape CachePool.releaseGroup and
+    // pile up over a long run (DedupClusters' and LinkGraph's round
+    // frames once stayed cached after their query's release)
+    assert(sourcesMatching("""localCheckpoint\(""".r) === Seq("graft/CachePool.scala"),
+      "localCheckpoint( outside CachePool.scala — use CachePool.pinCheckpoint")
   }
 }

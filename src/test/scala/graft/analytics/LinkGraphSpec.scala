@@ -35,8 +35,12 @@ class LinkGraphSpec extends SparkSpec {
     // hub 0 receives from 1,2,3; 3→0 twice (weight 2); 0→1 returns some
     // mass; 4 is DANGLING (receives from 1, emits nothing).
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (3L, 0L), (0L, 1L), (1L, 4L))
-    val got = LinkGraph.pageRankInt(edges.toDF("src", "dst"), iters = 5)
-      .as[(Long, Long)].collect().toMap
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    val ranks = LinkGraph.pageRankInt(edges.toDF("src", "dst"), iters = 5)
+    // every superseded round frame is freed: only the returned ranks stay
+    assert(spark.sparkContext.getPersistentRDDs.size - pinned === 1)
+    val got = ranks.as[(Long, Long)].collect().toMap
+    graft.CachePool.releaseAll()
     val want = refRanks(edges, iters = 5)
     assert(got === want)
     // the hub outranks every leaf; the dangling vertex still received mass

@@ -375,7 +375,8 @@ class DedupSpec extends SparkSpec {
   test("star-contraction tallies are exact under result-task retries") {
     // A task-retry budget is fixed when the SparkContext starts, so the
     // probe runs on its own local[4,3] JVM: first attempts of result
-    // tasks fail in the stage that tallies a round's edges.
+    // tasks fail in the stage that tallies a round's edges, and in the
+    // one task that runs the rounds of a small edge set.
     val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
       .toArray.map(_.toString).filter(_.startsWith("--add-opens"))
     val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ jvm ++ Seq(
@@ -396,6 +397,168 @@ class DedupSpec extends SparkSpec {
     assert(got.get("star_same_labels").contains("true"))
     assert(long("star_rounds") === long("star_clean_rounds"))
     assert(got.get("components_same_labels").contains("true"))
+    // the one-task path: its rounds, verdict and labels ride one result task
+    assert(long("one_task_failed_tasks") > 0, "no one-task round was retried")
+    assert(got.get("one_task_star_same_labels").contains("true"))
+    assert(long("one_task_star_rounds") === long("star_clean_rounds"))
+    assert(got.get("one_task_auto_same").contains("true"))
+    assert(got.get("one_task_auto_escalated").contains("true"))
+    assert(long("one_task_auto_rounds") === long("one_task_auto_clean_rounds"))
+  }
+
+  /** `body` with the advisory AQE partition size at one byte, so no
+    * non-empty edge set fits one task and every round runs as a shuffle
+    * round; the session's setting is restored afterwards.
+    */
+  private def distributed[T](body: => T): T = withAdvisory("1")(body)
+
+  private def withAdvisory[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s result and the Spark jobs it ran. A marker job after `body`
+    * flushes the listener queue, which delivers events in order.
+    */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "graft.dedupspec.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) flushed.countDown()
+        else jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def labelSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.as[(Long, Long)].collect().toSet
+
+  test("one-task rounds match the distributed rounds: edge sets, rounds, verdict, labels") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val vertex = Gen.choose(0L, 60L)
+    val piece = Gen.frequency(
+      3 -> Gen.zip(vertex, vertex).map(Seq(_)), // self-pairs included
+      1 -> (for (k <- Gen.choose(2, 30); b <- vertex) // chains
+        yield (0L until k).map(i => (b + i, b + i + 1))),
+      1 -> (for (k <- Gen.choose(2, 12); b <- vertex) // stars, hub at either end
+        yield (1L to k).map(i => if (i % 2 == 0) (b, b + 7 * i) else (b + 7 * i, b))),
+      1 -> (for (k <- Gen.choose(3, 6); b <- vertex) // cliques
+        yield for (i <- 0L until k; j <- i + 1 until k) yield (b + i, b + j)),
+      1 -> (for (k <- Gen.choose(3, 9); b <- vertex) // cycles
+        yield (0L until k).map(i => (b + i, b + (i + 1) % k))))
+    val graphs = for {
+      ps <- Gen.resize(8, Gen.listOf(piece)).map(_.flatten) // empty included
+      again <- Gen.someOf(ps)
+      flipped <- Gen.someOf(ps)
+      budget <- Gen.choose(1, 4)
+    } yield (ps ++ again ++ flipped.map(_.swap), budget) // duplicate and reversed pairs
+
+    def check(ps: Seq[(Long, Long)], budget: Int): Unit = {
+      val pairs = ps.toDF("id_a", "id_b")
+      // per round: the task's array round against the shuffle round
+      var engine = ps.filter(p => p._1 != p._2).distinct
+      val ids = LocalRounds.vertexIds(engine.map(_._1).toArray, engine.map(_._2).toArray)
+      var local = LocalRounds.edgeSet(ids, engine.map(_._1).toArray, engine.map(_._2).toArray)
+      var changed = true
+      var rounds = 0
+      while (changed) {
+        val got = DedupClusters.starRound(engine.toDF("u", "v")).as[(Long, Long)].collect().toSet
+        val next = LocalRounds.starRound(local)
+        rounds += 1
+        assert(LocalRounds.pairs(ids, next).toSet === got, s"round $rounds diverged on $ps")
+        changed = got != engine.toSet
+        engine = got.toSeq
+        local = next
+        assert(rounds < 50, s"no fixpoint on $ps")
+      }
+      val (oneTask, oneRounds) = DedupClusters.starContractionCounted(pairs)
+      assert(oneRounds === rounds, s"one-task star rounds on $ps")
+      val (autoOne, escOne, autoRoundsOne) =
+        DedupClusters.componentsAutoCounted(pairs, propagationBudget = budget)
+      val oneLabels = (labelSet(oneTask), labelSet(autoOne))
+      val (dist, distLabels, escDist, autoRoundsDist) = distributed {
+        val (d, r) = DedupClusters.starContractionCounted(pairs)
+        val (a, e, ar) = DedupClusters.componentsAutoCounted(pairs, propagationBudget = budget)
+        (r, (labelSet(d), labelSet(a)), e, ar)
+      }
+      graft.CachePool.releaseAll()
+      assert(dist === rounds, s"distributed star rounds on $ps")
+      assert(escOne === escDist, s"propagation verdict at budget $budget on $ps")
+      assert(autoRoundsOne === autoRoundsDist, s"auto star rounds on $ps")
+      assert(oneLabels === distLabels, s"labels on $ps")
+    }
+
+    // the empty graph fits one task at any bound; its fixed point is known
+    check(Seq.empty, 2)
+    val (empty, emptyRounds) = DedupClusters.starContractionCounted(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    assert(emptyRounds === 1 && empty.count() === 0)
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261019L)),
+      Prop.forAllNoShrink(graphs) { case (ps, budget) => check(ps, budget); true })
+    graft.CachePool.releaseAll()
+    assert(result.passed, result.status.toString)
+  }
+
+  test("star rounds hand off to one task when the edge set shrinks under the bound") {
+    // a 16-clique (120 edges) collapses to a 15-edge star in one round;
+    // with a 60-edge chain the edge set starts at 180 rows and drops
+    // under a 120-row bound mid-loop
+    val pairs = ((for (i <- 0L until 16L; j <- i + 1 until 16L) yield (i, j)) ++
+      (100L until 160L).map(i => (i, i + 1))).toDF("id_a", "id_b")
+    val ((all, allRounds), allJobs) = countingJobs(distributed {
+      val (l, r) = DedupClusters.starContractionCounted(pairs)
+      (labelSet(l), r)
+    })
+    val ((mixed, mixedRounds), mixedJobs) = countingJobs(withAdvisory((120 * 24).toString) {
+      val (l, r) = DedupClusters.starContractionCounted(pairs)
+      (labelSet(l), r)
+    })
+    val ((_, oneRounds), oneJobs) = countingJobs {
+      val (l, r) = DedupClusters.starContractionCounted(pairs)
+      (labelSet(l), r)
+    }
+    graft.CachePool.releaseAll()
+    assert(mixedRounds === allRounds && oneRounds === allRounds)
+    assert(mixed === all)
+    assert(all === ((0L until 16L).map(i => (i, 0L)) ++ (100L to 160L).map(i => (i, 100L))).toSet)
+    assert(oneJobs < mixedJobs && mixedJobs < allJobs,
+      s"one task $oneJobs, hand-off $mixedJobs, distributed $allJobs jobs: no hand-off")
+  }
+
+  test("componentsAutoCounted on a 249-edge chain runs at most 10 jobs") {
+    // the q_closure_scale shape: propagation cannot converge in budget 4,
+    // star contraction takes the rest; both fit one task each. Either
+    // way, every round frame but the one the labels read is freed as
+    // soon as its successor is materialized.
+    val chain = (0L until 249L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    def run(): ((Set[(Long, Long)], Boolean, Int), Int) = {
+      val pinned = sc.getPersistentRDDs.size
+      val (l, e, r) = DedupClusters.componentsAutoCounted(chain, propagationBudget = 4)
+      ((labelSet(l), e, r), sc.getPersistentRDDs.size - pinned)
+    }
+    val ((one, onePinned), jobs) = countingJobs(run())
+    val (dist, distPinned) = distributed(run())
+    graft.CachePool.releaseAll()
+    assert(one === dist)
+    assert(one === (((0L to 249L).map((_, 0L)).toSet, true, 9)))
+    assert(jobs <= 10, s"componentsAutoCounted ran $jobs jobs")
+    assert(onePinned <= 1 && distPinned <= 1,
+      s"round frames left cached: one task $onePinned, distributed $distPinned")
   }
 
   test("reliable checkpointing yields identical components to localCheckpoint") {

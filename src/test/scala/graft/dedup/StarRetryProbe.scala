@@ -43,8 +43,11 @@ object FailResultTasksOnce extends Rule[LogicalPlan] {
 /** Runs the star-contraction tally, `starContractionCounted` and
   * `components` on a `local[4,3]` session (3 attempts per task) with and
   * without first-attempt result-task failures, and prints `key=value`
-  * lines for `DedupSpec` to check. A session's task-retry budget is fixed
-  * when its SparkContext starts, so this runs in its own JVM.
+  * lines for `DedupSpec` to check. The distributed rounds run with the
+  * advisory partition size at one byte; `starContractionCounted` and
+  * `componentsAutoCounted` then run again in one task. A session's
+  * task-retry budget is fixed when its SparkContext starts, so this runs
+  * in its own JVM.
   */
 object StarRetryProbe {
   def main(args: Array[String]): Unit = {
@@ -71,9 +74,13 @@ object StarRetryProbe {
       (20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L))).toDF("id_a", "id_b")
     val round = DedupClusters.starRound(
       pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(advisory, "1")
     val (cleanStar, cleanRounds) = DedupClusters.starContractionCounted(pairs)
     val cleanStarLabels = labels(cleanStar)
     val cleanComponents = labels(DedupClusters.components(pairs))
+    val (cleanAuto, _, cleanAutoRounds) = DedupClusters.componentsAutoCounted(pairs, 2)
+    val cleanAutoLabels = labels(cleanAuto)
 
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .experimental.extraOptimizations = Seq(FailResultTasksOnce)
@@ -97,6 +104,18 @@ object StarRetryProbe {
     failedResultTasks.set(0)
     out("components_same_labels", labels(DedupClusters.components(pairs)) == cleanComponents)
     out("components_failed_tasks", failedResultTasks.get())
+
+    spark.conf.unset(advisory)
+    failedResultTasks.set(0)
+    val (oneStar, oneRounds) = DedupClusters.starContractionCounted(pairs)
+    out("one_task_star_same_labels", labels(oneStar) == cleanStarLabels)
+    out("one_task_star_rounds", oneRounds)
+    val (oneAuto, escalated, oneAutoRounds) = DedupClusters.componentsAutoCounted(pairs, 2)
+    out("one_task_auto_same", labels(oneAuto) == cleanAutoLabels)
+    out("one_task_auto_escalated", escalated)
+    out("one_task_auto_rounds", oneAutoRounds)
+    out("one_task_auto_clean_rounds", cleanAutoRounds)
+    out("one_task_failed_tasks", failedResultTasks.get())
     spark.stop()
   }
 }
