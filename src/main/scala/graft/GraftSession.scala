@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetSource
+
 /** Session factory with the engine's tuned defaults.
   *
   * Unlike the reference (which creates a bare session per Airflow task and
@@ -34,6 +36,11 @@ object GraftSession {
       // TESTDATA events.ts is parquet TIMESTAMP(NANOS): read as nanos Long.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark keys its codegen cache on the context class loader, which is
+      // per session while artifact isolation is on: every `newSession()`
+      // query then recompiles all its classes on every run. graft adds no
+      // session artifacts, so one shared loader loses nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
@@ -44,7 +51,7 @@ object GraftSession {
 
   /** Table loader: TESTDATA layout is one parquet per table. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSource.read(spark, s"$dir/$name.parquet")
 
   /** Robust events loader: the events table's `ts` has shipped in three
     * physical parquet encodings across testdata generations, and every

@@ -8,7 +8,7 @@ import graft.dedup.{DedupData, ExactDedup, MinHashLsh, NGramJaccard, SimHash}
 import graft.etl.{Cleaning, GeoEstatePipeline => Geo}
 import graft.multimodal.Multimodal
 import graft.similarity.{EmbeddingDedup, Knn, LshKnn}
-import graft.sources.BatchSink
+import graft.sources.{BatchSink, ParquetSource}
 import graft.streaming.EventStreams
 import graft.text.{Fingerprint, TextAnalysis}
 
@@ -23,7 +23,7 @@ import graft.text.{Fingerprint, TextAnalysis}
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetSource.read(s, s"$dir/$name.parquet")
 
   /** Wall-clock spent building the memoized shared staging artifacts
     * (pair graphs, closures, spans, media meta, graph index, classifier
@@ -219,7 +219,7 @@ object SparkEntry {
             org.apache.spark.sql.types.StructField("mx",
               org.apache.spark.sql.types.TimestampType)))))
     }
-    val bounds = s.read.parquet(dirs(2)).collect()(0)
+    val bounds = ParquetSource.read(s, dirs(2)).collect()(0)
     (dirs.take(2), bounds.getTimestamp(0), bounds.getTimestamp(1))
   }
 
@@ -321,7 +321,7 @@ object SparkEntry {
     fs.mkdirs(new org.apache.hadoop.fs.Path(src)): Unit
     publish(batches.head, s"$src/b0")
     val input = s2.readStream
-      .schema(s2.read.parquet(s"$src/b0").schema).parquet(s"$src/*")
+      .schema(ParquetSource.read(s2, s"$src/b0").schema).parquet(s"$src/*")
     // outputMode "foreachBatch": `build` needs FULL batch semantics (rank
     // windows, iterative self-unions, mid-plan actions) that a streaming
     // frame cannot analyze — the standard Structured Streaming escape
@@ -375,7 +375,7 @@ object SparkEntry {
       case Some(r) => s2.read.schema(r.schema).parquet(out)
       case None => fbSchema match {
         case Some(sc) => s2.read.schema(sc).parquet(out)
-        case None => s2.read.parquet(out) // no batch ran: b0 always publishes
+        case None => ParquetSource.read(s2, out) // no batch ran: b0 always publishes
       }
     }
   }
@@ -756,7 +756,7 @@ object SparkEntry {
       val houses = Geo.housesUnindexed(s, d)
       val out = scratchDir("graft_sink")
       BatchSink.writeParquetPartitioned(houses, out, Seq("region"))
-      val back = s.read.parquet(out)
+      val back = ParquetSource.read(s, out)
       back.groupBy("region")
         .agg(count(lit(1)).as("n_objects"), sum(col("population")).as("sum_pop"))
         .orderBy("region")
@@ -1841,7 +1841,7 @@ object SparkEntry {
         .collect().map(_.getLong(0).toString).toSet
       val dropped = graft.sources.PartitionMaintenance.dropDeadPartitions(
         postingsDir, "cell", liveCells)
-      val after = s.read.parquet(postingsDir)
+      val after = ParquetSource.read(s, postingsDir)
         .groupBy(col("cell").cast("long").as("cell"))
         .agg(count(lit(1)).as("n_after"))
       val tombs = pre.join(post, Seq("vec_id"), "left_anti")
@@ -2008,7 +2008,7 @@ object SparkEntry {
         .write.mode("overwrite").partitionBy("cell").parquet(dirA)
       assigned.filter(col("half") === 1).select("vec_id", "cell")
         .write.mode("overwrite").partitionBy("cell").parquet(dirB)
-      def backHalf(dir: String): DataFrame = s.read.parquet(dir)
+      def backHalf(dir: String): DataFrame = ParquetSource.read(s, dir)
         .select(col("vec_id"), col("cell").cast("long").as("cell"))
       backHalf(dirA).unionByName(backHalf(dirB))
         .write.mode("overwrite").partitionBy("cell").parquet(dirM)
@@ -2034,7 +2034,7 @@ object SparkEntry {
           "then (vec_id & 2147483647) * 2654435761 end)"), lit(0L))
       side(backHalf(dirA), 0)
         .unionByName(side(backHalf(dirB), 1))
-        .unionByName(side(s.read.parquet(dirM)
+        .unionByName(side(ParquetSource.read(s, dirM)
           .select(col("vec_id"), col("cell").cast("long").as("cell")), 2))
         .groupBy("cell")
         .agg(nOf(0).as("n_a"), nOf(1).as("n_b"), nOf(2).as("n_merged"),
@@ -2837,7 +2837,7 @@ object SparkEntry {
       val out = scratchDir("graft_media_release")
       manifest.withColumn("shard_group", expr("shard_key div 1024"))
         .write.mode("overwrite").partitionBy("shard_group").parquet(out)
-      s.read.parquet(out)
+      ParquetSource.read(s, out)
         .select(col("shard_key"), col("n_docs"), col("sum_tokens"),
           col("shard_len"), col("start_offset"),
           col("byte_len").as("media_bytes"),
@@ -2919,7 +2919,7 @@ object SparkEntry {
       val outB = mediaNightlySinkB
       manifest(meta).write.mode("overwrite").partitionBy("shard_group").parquet(outA)
       manifest(metaB).write.mode("overwrite").partitionBy("shard_group").parquet(outB)
-      def groups(path: String, sfx: String): DataFrame = s.read.parquet(path)
+      def groups(path: String, sfx: String): DataFrame = ParquetSource.read(s, path)
         .groupBy(col("shard_group").cast("long").as("shard_group"))
         .agg(count(lit(1)).as(s"n_shards$sfx"),
           sum("sum_tokens").as(s"tokens$sfx"),
@@ -3843,7 +3843,7 @@ object SparkEntry {
       val out = scratchDir("graft_dpp")
       graft.sources.BatchSink.writeParquetPartitioned(
         Geo.housesUnindexed(s, d), out, Seq("region"))
-      val fact = s.read.parquet(out)
+      val fact = ParquetSource.read(s, out)
       val dim = t(s, d, "nation").filter(col("n_regionkey") === 1)
       fact.join(dim, fact("region") === dim("n_name"))
         .groupBy("region")
@@ -4031,7 +4031,7 @@ object SparkEntry {
       val out = scratchDir("graft_prune")
       graft.sources.BatchSink.writeParquetPartitioned(
         events(s, d), out, Seq("event_type"))
-      s.read.parquet(out)
+      ParquetSource.read(s, out)
         .filter(col("event_type") === "purchase")
         .agg(count(lit(1)).as("n_events"),
           sum(col("user_id")).as("sum_user_ids"),
@@ -4069,7 +4069,7 @@ object SparkEntry {
       docs.withColumn("shard",
           expr(s"least(15, ((n_chars - $mn) * 16) div ${mx - mn + 1})"))
         .write.mode("overwrite").partitionBy("shard").parquet(out)
-      val manifest = s.read.parquet(out)
+      val manifest = ParquetSource.read(s, out)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_rows"),
           min("n_chars").as("zmin"), max("n_chars").as("zmax"))
@@ -4119,11 +4119,11 @@ object SparkEntry {
       li.repartitionByRange(64, col("l_partkey"))
         .sortWithinPartitions("l_partkey")
         .write.mode("overwrite").parquet(rDir)
-      val zBack = s.read.parquet(zDir)
+      val zBack = ParquetSource.read(s, zDir)
       val (_, zHit) = graft.sources.ZOrder.filesIntersectingBox(
         zBack, "l_partkey", 1.0, pkHi, "l_suppkey", 1.0, skHi)
       val (_, rHit) = graft.sources.ZOrder.filesIntersectingBox(
-        s.read.parquet(rDir), "l_partkey", 1.0, pkHi, "l_suppkey", 1.0, skHi)
+        ParquetSource.read(s, rDir), "l_partkey", 1.0, pkHi, "l_suppkey", 1.0, skHi)
       zBack
         .filter(col("l_partkey") * 4 <= mx.getLong(0) &&
           col("l_suppkey") * 4 <= mx.getLong(1))
@@ -4379,7 +4379,7 @@ object SparkEntry {
       val delDf = deleted.map(_.split("/")(0).stripPrefix("grp=").toLong)
         .groupBy(identity).map { case (k, v) => (k, v.size.toLong) }.toSeq
         .toDF("grp", "n_dirs_vacuumed")
-      val back = s.read.parquet(out)
+      val back = ParquetSource.read(s, out)
         .groupBy(col("grp").cast("long").as("grp"))
         .agg(max(col("epoch").cast("long")).as("live_epoch"),
           count(lit(1)).as("rows_after"),
@@ -4414,7 +4414,7 @@ object SparkEntry {
       val before = graft.sources.Compaction.dataFiles(out)
       graft.sources.Compaction.compact(s, out, targetBytes = 64L * 1024 * 1024)
       val after = graft.sources.Compaction.dataFiles(out)
-      s.read.parquet(out)
+      ParquetSource.read(s, out)
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_quantity")).cast("long").as("sum_qty"),
           sum(col("l_orderkey")).as("sum_okey"))
@@ -5041,7 +5041,7 @@ object SparkEntry {
       val out = scratchDir("graft_shard_release")
       manifest.withColumn("shard_group", expr("bin_id div 16"))
         .write.mode("overwrite").partitionBy("shard_group").parquet(out)
-      s.read.parquet(out)
+      ParquetSource.read(s, out)
         .select(col("bin_id"), col("n_docs"), col("sum_tokens"),
           col("shard_len"), col("start_offset"), col("byte_len"),
           col("byte_offset"), col("content_xor"),
@@ -5144,7 +5144,7 @@ object SparkEntry {
       val out = scratchDir("graft_llm_release")
       manifest.withColumn("shard_group", expr("shard_key div 1024"))
         .write.mode("overwrite").partitionBy("shard_group").parquet(out)
-      s.read.parquet(out)
+      ParquetSource.read(s, out)
         .select(col("shard_key"), col("n_docs"), col("sum_tokens"),
           col("shard_len"), col("start_offset"), col("byte_len"),
           col("byte_offset"), col("content_xor"),
@@ -5196,7 +5196,7 @@ object SparkEntry {
         .write.mode("overwrite").partitionBy("shard_group").parquet(outA)
       nightlyManifest(day2)
         .write.mode("overwrite").partitionBy("shard_group").parquet(outB)
-      def groups(path: String, sfx: String): DataFrame = s.read.parquet(path)
+      def groups(path: String, sfx: String): DataFrame = ParquetSource.read(s, path)
         .groupBy(col("shard_group").cast("long").as("shard_group"))
         .agg(count(lit(1)).as(s"n_shards$sfx"),
           sum("shard_len").as(s"tokens$sfx"),
@@ -6562,7 +6562,7 @@ object SparkEntry {
       assigned.write.mode("overwrite").parquet(s"$dd/nodes")
       graft.CachePool.release(assigned)
     }
-    (s.read.parquet(s"$dir/nodes"), s.read.parquet(s"$dir/edges"))
+    (ParquetSource.read(s, s"$dir/nodes"), ParquetSource.read(s, s"$dir/edges"))
   }
 
   /** Memoized on-disk staging of [[mediaSurvivorMeta]] (VERDICT r18
@@ -6587,7 +6587,7 @@ object SparkEntry {
         .mode("overwrite").parquet(s"$dd/items")
       meta.write.mode("overwrite").parquet(s"$dd/meta")
     }
-    (s.read.parquet(s"$dir/items"), s.read.parquet(s"$dir/meta"))
+    (ParquetSource.read(s, s"$dir/items"), ParquetSource.read(s, s"$dir/meta"))
   }
 
   /** Memoized on-disk staging of the two near-dup PAIR GRAPHS over the
@@ -6613,13 +6613,13 @@ object SparkEntry {
           col("doc_id"), col("text"), col("source"), n = 3, threshold = 0.8)
         .select("id_a", "id_b")
         .write.mode("overwrite").parquet(s"$dd/pairs")
-      graft.dedup.DedupClusters.componentsAuto(s.read.parquet(s"$dd/pairs"))
+      graft.dedup.DedupClusters.componentsAuto(ParquetSource.read(s, s"$dd/pairs"))
         .write.mode("overwrite").parquet(s"$dd/comp")
     }
   private def sharedContainPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${sharedContainDir(s, d)}/pairs")
+    ParquetSource.read(s, s"${sharedContainDir(s, d)}/pairs")
   private def sharedContainComp(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${sharedContainDir(s, d)}/comp")
+    ParquetSource.read(s, s"${sharedContainDir(s, d)}/comp")
 
   private def sharedMinhashDir(s: SparkSession, d: String): String =
     stagedDir("minhash", d) { dd =>
@@ -6628,13 +6628,13 @@ object SparkEntry {
           col("doc_id"), col("text"))
         .select("id_a", "id_b")
         .write.mode("overwrite").parquet(s"$dd/pairs")
-      graft.dedup.DedupClusters.componentsAuto(s.read.parquet(s"$dd/pairs"))
+      graft.dedup.DedupClusters.componentsAuto(ParquetSource.read(s, s"$dd/pairs"))
         .write.mode("overwrite").parquet(s"$dd/comp")
     }
   private def sharedMinhashPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${sharedMinhashDir(s, d)}/pairs")
+    ParquetSource.read(s, s"${sharedMinhashDir(s, d)}/pairs")
   private def sharedMinhashComp(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${sharedMinhashDir(s, d)}/comp")
+    ParquetSource.read(s, s"${sharedMinhashDir(s, d)}/comp")
 
   /** Memoized on-disk staging of the duplicated-span derivation over the
     * planted corpus (the [[sharedGraphIndex]] discipline applied to the
@@ -6646,7 +6646,7 @@ object SparkEntry {
     * the derivation itself fresh every attempt.
     */
   private def sharedSpanFrame(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(stagedDir("span", d) { dd =>
+    ParquetSource.read(s, stagedDir("span", d) { dd =>
       graft.text.SpanDedup.duplicateSpans(
           DedupData.withPlantedDups(t(s, d, "documents")),
           col("doc_id"), col("text"))

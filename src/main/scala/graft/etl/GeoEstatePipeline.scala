@@ -4,14 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.ParquetSource
+
 /** End-to-end re-expression of the reference DAG's data path:
-  * ingest → regex-clean → validate → dense re-index → type-normalize
+  * ingest → clean → validate → dense re-index → type-normalize
   * (/root/reference/dags/main.py tasks 1-3), as ONE composed Catalyst plan.
   *
   * The reference writes parquet between every Airflow task; here each stage
-  * is a `DataFrame => DataFrame` so Catalyst fuses the regexes, the validity
-  * filter and the casts into a single codegen'd scan — at 100 TB that saves
-  * two full materializations of the dataset.
+  * is a `DataFrame => DataFrame` so Catalyst fuses the cleaning kernels
+  * (one native byte scan per column, [[Cleaning.cleanNumeric]]), the
+  * validity filter and the casts into a single codegen'd scan — at 100 TB
+  * that saves two full materializations of the dataset. Both input tables
+  * are read through [[graft.sources.ParquetSource]], whose schema comes
+  * from a footer read on the driver rather than an inference job.
   *
   * The houses CSV itself is not part of the driver's testdata, so the
   * pipeline is exercised over a *deterministically derived* dirty table
@@ -26,8 +31,8 @@ object GeoEstatePipeline {
     * year, %17==0 → blank region (mirrors the CSV's failure modes).
     */
   def dirtyHouses(spark: SparkSession, dir: String): DataFrame = {
-    val c = spark.read.parquet(s"$dir/customer.parquet")
-    val n = spark.read.parquet(s"$dir/nation.parquet")
+    val c = ParquetSource.read(spark, s"$dir/customer.parquet")
+    val n = ParquetSource.read(spark, s"$dir/nation.parquet")
     val k = col("c_custkey")
     c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
       .select(
@@ -57,7 +62,7 @@ object GeoEstatePipeline {
       )
   }
 
-  /** Regex-clean the raw text columns (reference task 2 part 1). */
+  /** Clean the raw text columns (reference task 2 part 1). */
   def cleaned(dirty: DataFrame): DataFrame =
     dirty
       .withColumn("square_s", cleanNumeric(col("square_raw"), KeepNumericDot))
@@ -128,7 +133,7 @@ object GeoEstatePipeline {
     * (main.py:149-168 column set) through the same clean → validate →
     * reindex → cast plan. Column values arrive with unit suffixes,
     * non-breaking-space thousands separators ("3 078.30") and free-text
-    * garbage — all handled by the same regex cleaning the derived-table
+    * garbage — all handled by the same cleaning kernel the derived-table
     * variant exercises under the DuckDB oracle.
     */
   def fromCsv(spark: SparkSession, path: String): DataFrame = {

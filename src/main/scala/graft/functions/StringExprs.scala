@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization for corpus preparation. Spark has no built-in
@@ -280,6 +281,75 @@ case class GramBuckets(child: Expression, buckets: Int, mod: Long = 1000003L)
     copy(child = newChild)
 }
 
+/** Keep only the bytes of an ASCII keep-set: one scan over the UTF-8
+  * bytes, no decode, no regex. Equals `regexp_replace(trim(c), "[^keep]",
+  * "")` for every input: space is never in a keep-set (so `trim` changes
+  * nothing), and an ASCII byte is never part of a multi-byte sequence, so
+  * every non-ASCII code point and every invalid byte is dropped either
+  * way. The keep-set is a 128-bit mask (`lo` covers bytes 0-63, `hi`
+  * 64-127); a string with nothing to drop is returned as it came.
+  *
+  * The generated code is one static call per use: the cleaning columns
+  * appear several times in one fused filter-and-project stage, and an
+  * inlined loop per use grows that method past the JIT's size limit
+  * (8000 bytecode bytes), leaving the whole stage interpreted.
+  */
+case class KeepAsciiBytes(child: Expression, keep: String) extends UnaryExpression {
+
+  require(keep.nonEmpty && keep.forall(c => c > ' ' && c < 0x7f),
+    s"keep-set must be printable non-space ASCII: '$keep'")
+
+  private val lo = keep.filter(_ < 64).foldLeft(0L)((m, c) => m | (1L << c))
+  private val hi = keep.filter(_ >= 64).foldLeft(0L)((m, c) => m | (1L << (c - 64)))
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"keep_ascii_bytes expects string, got ${t.simpleString}")
+  }
+
+  override def dataType: DataType = StringType
+
+  override protected def nullSafeEval(input: Any): Any =
+    KeepAsciiBytes.keepBytes(input.asInstanceOf[UTF8String], lo, hi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = classOf[KeepAsciiBytes].getName
+    defineCodeGen(ctx, ev, c => s"$kernel.keepBytes($c, ${lo}L, ${hi}L)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): KeepAsciiBytes =
+    copy(child = newChild)
+}
+
+object KeepAsciiBytes {
+
+  private def kept(b: Byte, lo: Long, hi: Long): Boolean =
+    b >= 0 && ((if (b < 64) lo else hi) >>> b & 1L) != 0
+
+  /** The bytes of `s` whose bits are set in the mask `lo`/`hi`. */
+  def keepBytes(s: UTF8String, lo: Long, hi: Long): UTF8String = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes()
+    var m = 0
+    var i = 0
+    while (i < n) { if (kept(Platform.getByte(base, off + i), lo, hi)) m += 1; i += 1 }
+    if (m == n) s
+    else {
+      val out = new Array[Byte](m)
+      m = 0
+      i = 0
+      while (i < n) {
+        val b = Platform.getByte(base, off + i)
+        if (kept(b, lo, hi)) { out(m) = b; m += 1 }
+        i += 1
+      }
+      UTF8String.fromBytes(out)
+    }
+  }
+}
+
 object StringExprs {
 
   /** Per-element portable feature bucket of an array<string> (see
@@ -302,6 +372,12 @@ object StringExprs {
   /** Repair UTF-8-read-as-Latin-1/cp1252 mojibake (lossless trips only). */
   def fixMojibake(c: Column): Column =
     ColumnBridge.column(FixMojibake(ColumnBridge.expression(c)))
+
+  /** The bytes of `c` that are in the ASCII `keep` set (see
+    * [[KeepAsciiBytes]]).
+    */
+  def keepAsciiBytes(c: Column, keep: String): Column =
+    ColumnBridge.column(KeepAsciiBytes(ColumnBridge.expression(c), keep))
 
   /** Strip diacritics: NFD-decompose, then drop combining marks. */
   def stripAccents(c: Column): Column =

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSource
+
 /** Typed views of the core tables: `Dataset[T]` with case-class encoders
   * where type safety pays (pipeline composition, streaming state, tests);
   * the DataFrame form stays primary where schemas are dynamic (generic
@@ -21,12 +23,12 @@ object Tables {
 
   def docs(spark: SparkSession, dir: String): Dataset[Doc] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet").as[Doc]
+    ParquetSource.read(spark, s"$dir/documents.parquet").as[Doc]
   }
 
   def embeddings(spark: SparkSession, dir: String): Dataset[Embedding] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/embeddings.parquet").as[Embedding]
+    ParquetSource.read(spark, s"$dir/embeddings.parquet").as[Embedding]
   }
 
   /** events.parquet stores nanos timestamps; normalize to micros first
@@ -34,7 +36,7 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): Dataset[Ev] = {
     import spark.implicits._
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = ParquetSource.read(spark, s"$dir/events.parquet")
     val fixed = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

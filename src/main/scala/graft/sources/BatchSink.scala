@@ -29,9 +29,12 @@ object BatchSink {
     // Shuffle rows to their partition value first: without it every task
     // opens a file per partition value it happens to hold (tasks × values
     // small files); with it each value's rows land in one task's file.
+    // The partition count is explicit: a repartition by columns alone is
+    // one AQE may coalesce, down to a single task writing every file.
     val arranged =
       if (partitionCols.nonEmpty)
-        df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+        df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+          partitionCols.map(org.apache.spark.sql.functions.col): _*)
       else df
     val w = arranged.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)

@@ -66,7 +66,7 @@ object Compaction {
 
     val bytes = dataBytes(dir)
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(dir).repartition(n).write.mode("overwrite").parquet(tmp.toString)
+    ParquetSource.read(spark, dir).repartition(n).write.mode("overwrite").parquet(tmp.toString)
     Files.move(Paths.get(dir), old)
     Files.move(tmp, Paths.get(dir))
     rm(old)

@@ -28,7 +28,7 @@ object IndexIO {
   }
 
   def loadIvf(spark: SparkSession, path: String): IvfKnn.IvfIndex = {
-    val rows = spark.read.parquet(path)
+    val rows = ParquetSource.read(spark, path)
       .select("cell", "pos", "x").collect()
     val cells = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
       rs.sortBy(_.getInt(1)).map(_.getFloat(2))
@@ -49,7 +49,7 @@ object IndexIO {
   }
 
   def loadPq(spark: SparkSession, path: String): PqKnn.PqIndex = {
-    val rows = spark.read.parquet(path)
+    val rows = ParquetSource.read(spark, path)
       .select("sub", "code", "pos", "x", "dim").collect()
     val dim = rows.head.getInt(4)
     val books = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, subRows) =>
@@ -71,7 +71,7 @@ object IndexIO {
   }
 
   def loadOpq(spark: SparkSession, path: String): OpqKnn.OpqIndex = {
-    val rows = spark.read.parquet(s"$path/rotation")
+    val rows = ParquetSource.read(spark, s"$path/rotation")
       .select("row", "pos", "x").collect()
     val rotation = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (_, rs) =>
       rs.sortBy(_.getInt(1)).map(_.getFloat(2))
@@ -91,7 +91,7 @@ object IndexIO {
   }
 
   def loadBloom(spark: SparkSession, path: String): Array[Byte] =
-    spark.read.parquet(path).select("filter").head().getAs[Array[Byte]](0)
+    ParquetSource.read(spark, path).select("filter").head().getAs[Array[Byte]](0)
 
   /** Sorted eval-gram set (the decontamination probe's haystack). */
   def saveGrams(spark: SparkSession, grams: Array[Long], path: String): Unit = {
@@ -100,7 +100,7 @@ object IndexIO {
   }
 
   def loadGrams(spark: SparkSession, path: String): Array[Long] =
-    spark.read.parquet(path).select("g").collect().map(_.getLong(0)).sorted
+    ParquetSource.read(spark, path).select("g").collect().map(_.getLong(0)).sorted
 
   /** A trained BPE merge table — the tokenizer itself: one row per rank,
     * rank order IS merge priority ([[graft.functions.BpeEncodeCount]]
@@ -114,7 +114,7 @@ object IndexIO {
   }
 
   def loadBpe(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).select("rank", "left", "right").collect()
+    ParquetSource.read(spark, path).select("rank", "left", "right").collect()
       .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
 
   /** The SQ8 code table — the corpus-sized compressed index COLUMN (one
@@ -146,9 +146,9 @@ object IndexIO {
   }
 
   def loadSq8(spark: SparkSession, path: String): (org.apache.spark.sql.DataFrame, Int) = {
-    val bits = spark.read.parquet(s"$path/scale")
+    val bits = ParquetSource.read(spark, s"$path/scale")
       .select("scale_bits").collect()(0).getInt(0)
-    (spark.read.parquet(s"$path/codes").select("vec_id", "code"), bits)
+    (ParquetSource.read(spark, s"$path/codes").select("vec_id", "code"), bits)
   }
 
   /** The FULL IVF+SQ8 index — coarse codebook, grid scale, and the
@@ -180,9 +180,9 @@ object IndexIO {
   def loadIvfSq8(spark: SparkSession, path: String)
       : (org.apache.spark.sql.DataFrame, IvfKnn.IvfIndex, Int) = {
     import org.apache.spark.sql.functions.col
-    val bits = spark.read.parquet(s"$path/scale")
+    val bits = ParquetSource.read(spark, s"$path/scale")
       .select("scale_bits").collect()(0).getInt(0)
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = ParquetSource.read(spark, s"$path/postings")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("code"))
     (postings, loadIvf(spark, s"$path/codebook"), bits)
   }
@@ -306,10 +306,10 @@ object IndexIO {
       s"graph artifact at $path has an unfinished maintenance run " +
         "(_MAINTENANCE_PENDING present): nodes and edges may disagree — " +
         "rebuild with saveGraph or restore from a known-good copy")
-    val meta = spark.read.parquet(s"$path/meta").select("scale_bits", "m").collect()(0)
-    val nodes = spark.read.parquet(s"$path/nodes")
+    val meta = ParquetSource.read(spark, s"$path/meta").select("scale_bits", "m").collect()(0)
+    val nodes = ParquetSource.read(spark, s"$path/nodes")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("code"))
-    val edges = spark.read.parquet(s"$path/edges")
+    val edges = ParquetSource.read(spark, s"$path/edges")
       .select(col("src"), col("dst"), col("dist"), col("cell").cast("long").as("cell"))
     (nodes, edges, loadIvf(spark, s"$path/codebook"), meta.getInt(0), meta.getInt(1))
   }
@@ -338,7 +338,7 @@ object IndexIO {
                   newVectors: org.apache.spark.sql.DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.col
     requireNoPendingMarker(spark, path, "append")
-    val meta = spark.read.parquet(s"$path/meta").select("scale_bits", "m").collect()(0)
+    val meta = ParquetSource.read(spark, s"$path/meta").select("scale_bits", "m").collect()(0)
     val (scaleBits, m) = (meta.getInt(0), meta.getInt(1))
     val codebook = loadIvf(spark, s"$path/codebook")
     // ids already RESIDENT are dropped (anti-join on the column-pruned id
@@ -352,7 +352,7 @@ object IndexIO {
         IvfKnn.nearestCells(col("embedding"), codebook, 1)
           .getItem(0).cast("long").as("cell"),
         graft.functions.VecOps.sq8F(col("embedding"), scaleBits).as("code"))
-      .join(spark.read.parquet(s"$path/nodes").select(col("vec_id")),
+      .join(ParquetSource.read(spark, s"$path/nodes").select(col("vec_id")),
         Seq("vec_id"), "left_anti")
       .transform(graft.CachePool.pinCheckpoint)
     // the touched-cell set is bounded by nlist — the same justified
@@ -363,7 +363,7 @@ object IndexIO {
       graft.CachePool.releaseCheckpoint(newNodes)
       return
     }
-    val resident = spark.read.parquet(s"$path/nodes")
+    val resident = ParquetSource.read(spark, s"$path/nodes")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("code"))
       .filter(col("cell").isin(touched: _*)) // partition-pruned read
     // the touched-cell MEMBERSHIP (resident + new) is pinned in cache and
@@ -430,8 +430,8 @@ object IndexIO {
                       ids: org.apache.spark.sql.DataFrame, path: String): Unit = {
     import org.apache.spark.sql.functions.col
     requireNoPendingMarker(spark, path, "delete")
-    val m = spark.read.parquet(s"$path/meta").select("m").collect()(0).getInt(0)
-    val nodes = spark.read.parquet(s"$path/nodes")
+    val m = ParquetSource.read(spark, s"$path/meta").select("m").collect()(0).getInt(0)
+    val nodes = ParquetSource.read(spark, s"$path/nodes")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("code"))
     val del = ids.select(col("vec_id"))
     // touched cells: bounded by nlist, the same justified driver read as
@@ -570,7 +570,7 @@ object IndexIO {
     val tsPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tsPath)) return (nodes, edges, cb, bits, m)
-    val ts = spark.read.parquet(s"$path/tombstones").select(col("vec_id"))
+    val ts = ParquetSource.read(spark, s"$path/tombstones").select(col("vec_id"))
     // touched cells: bounded by nlist, the justified driver read
     val touched = nodes.join(ts, Seq("vec_id"), "left_semi")
       .select("cell").distinct().collect().map(_.getLong(0)).sorted
@@ -599,7 +599,7 @@ object IndexIO {
     val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(tsPath)) return
     deleteFromGraph(spark,
-      spark.read.parquet(s"$path/tombstones").select(col("vec_id")), path)
+      ParquetSource.read(spark, s"$path/tombstones").select(col("vec_id")), path)
     fs.delete(tsPath, true): Unit
   }
 
@@ -617,7 +617,7 @@ object IndexIO {
   }
 
   def loadClassifier(spark: SparkSession, path: String): graft.text.QualityClassifier.Model = {
-    val rows = spark.read.parquet(path).select("b", "x", "buckets").collect()
+    val rows = ParquetSource.read(spark, path).select("b", "x", "buckets").collect()
     val buckets = rows.head.getInt(2)
     val w = new Array[Double](buckets)
     var bias = 0.0

@@ -73,4 +73,11 @@ class SparkEntryContractSpec extends AnyFunSuite {
     assert(sourcesMatching("""localCheckpoint\(""".r) === Seq("graft/CachePool.scala"),
       "localCheckpoint( outside CachePool.scala — use CachePool.pinCheckpoint")
   }
+
+  test("only ParquetSource reads parquet with an inferred schema") {
+    // an inferring read runs a Spark job per call just to read a footer;
+    // ParquetSource.read reads that footer on the driver instead
+    assert(sourcesMatching("""read\s*\.\s*parquet\(""".r) === Seq("graft/sources/ParquetSource.scala"),
+      "read.parquet( outside ParquetSource.scala — use ParquetSource.read")
+  }
 }

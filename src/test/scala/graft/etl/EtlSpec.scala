@@ -167,6 +167,72 @@ class EtlSpec extends SparkSpec {
     assert(viaZip === viaWindow)
   }
 
+  test("reindexScalable: dense ids on a multi-partition input under AQE coalescing, one shuffle") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val sizes = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k")
+    val before = sizes.map { case (k, _) => k -> spark.conf.getOption(k) }
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") === "true")
+    // small partition sizes: AQE still coalesces the range exchange, but
+    // into several partitions, so the ids must cross partition boundaries
+    sizes.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = table("orders").select("o_orderkey", "o_custkey").repartition(7)
+      val viaWindow = Cleaning.reindex(df, col("o_orderkey"), "rid")
+        .select("rid", "o_orderkey").as[(Long, Long)].collect().sorted.toSeq
+      val reindexed = Cleaning.reindexScalable(df, col("o_orderkey"), "rid")
+      val viaIds = reindexed.select("rid", "o_orderkey").as[(Long, Long)].collect().sorted.toSeq
+      assert(viaIds === viaWindow)
+      assert(viaIds.map(_._1) === (1L to viaIds.size.toLong))
+      assert(reindexed.columns.toSeq === Seq("o_orderkey", "o_custkey", "rid"))
+      val parts = df.repartitionByRange(col("o_orderkey"))
+        .select(spark_partition_id(), col("*")).collect().map(_.getInt(0)).distinct.length
+      assert(parts > 1, s"the range shuffle coalesced to $parts partition(s)")
+
+      // the exchanges that ran: the final AQE plans (the input plan lacks
+      // the exchanges EnsureRequirements adds), their query stages and
+      // the persisted frame's own plan
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case c: InMemoryTableScanExec => c +: nodes(c.relation.cachedPlan)
+        case o => o +: o.children.flatMap(nodes)
+      }
+      reindexed.collect(): Unit
+      val all = nodes(reindexed.queryExecution.executedPlan)
+      assert(all.exists(_.isInstanceOf[ShuffleExchangeExec]), "no exchange seen in the plan")
+      val cached = all.collectFirst { case c: InMemoryTableScanExec => c.relation.cachedPlan }
+        .getOrElse(fail("no persisted frame in the plan"))
+      val underCache = nodes(cached).collect { case e: ShuffleExchangeExec => e }
+      assert(underCache.size === 1 &&
+        underCache.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"one range shuffle under the persisted frame:\n$cached")
+      // the only exchange keyed on __pid carries the per-partition counts
+      // (partial aggregates), never the table
+      def partialAgg(p: SparkPlan): Boolean = p match {
+        case w: WholeStageCodegenExec => partialAgg(w.child)
+        case _: HashAggregateExec => true
+        case _ => false
+      }
+      val tableOnPid = all.collect {
+        case e @ ShuffleExchangeExec(h: HashPartitioning, child, _, _)
+            if h.references.exists(_.name == "__pid") && !partialAgg(child) => e
+      }
+      assert(tableOnPid.isEmpty, s"hash exchange of the table on __pid:\n$tableOnPid")
+    } finally {
+      before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      graft.CachePool.releaseAll()
+    }
+  }
+
   test("fromCsv runs the reference's REAL UTF-16 CSV end to end") {
     val houses = GeoEstatePipeline.fromCsv(
       spark, "/root/reference/data/russian_houses_slice.csv")
