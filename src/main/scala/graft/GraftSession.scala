@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.ParquetSource
+import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs, ParquetSource}
 
 /** Session factory with the engine's tuned defaults.
   *
@@ -19,6 +21,24 @@ object GraftSession {
     * program that builds a SparkSession (`SparkEntryContractSpec` pins
     * it). On a real cluster the same configs apply, minus `master`;
     * shuffle partitions scale with cluster cores.
+    *
+    * Two more things make local mode cheaper without changing a result:
+    *   - Local files go through [[graft.sources.ForkFreeLocalFileSystem]]
+    *     and its `FileContext` twin [[graft.sources.ForkFreeLocalFs]].
+    *     Both are registered because Spark writes through both: parquet
+    *     sinks, staging and the drain harness through `FileSystem`; the
+    *     streaming offset and commit logs and the state-store files
+    *     through `FileContext`. Without libhadoop the stock classes start
+    *     a `chmod` per created file and a `readlink` per rename; that
+    *     fork/exec was most of a streaming drain's commit time.
+    *   - The calling thread adopts the executor's task class loader as its
+    *     context loader, and threads it starts later (query clients,
+    *     stream execution, AQE and broadcast pools) inherit it. Spark keys
+    *     its codegen cache on the context loader, so with the driver on
+    *     the app loader and the tasks on the executor's loader every
+    *     whole-stage class compiled twice, once per loader. The task
+    *     loader delegates to the app loader, so class resolution is as
+    *     before.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = SparkSession
@@ -44,9 +64,23 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (spark.sparkContext.isLocal) Thread.currentThread.setContextClassLoader(taskLoader(spark))
     spark
+  }
+
+  private val seenLoader = new AtomicReference[ClassLoader]
+
+  /** The context class loader of the session's executor task threads, read
+    * by one single-task job (local mode: the task runs in this JVM).
+    */
+  private def taskLoader(spark: SparkSession): ClassLoader = seenLoader.synchronized {
+    spark.sparkContext.parallelize(Seq(0), 1)
+      .foreach(_ => seenLoader.set(Thread.currentThread.getContextClassLoader))
+    seenLoader.get
   }
 
   /** Table loader: TESTDATA layout is one parquet per table. */

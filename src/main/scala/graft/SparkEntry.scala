@@ -661,8 +661,10 @@ object SparkEntry {
     */
   private def dedupGate(algo: String, pairs: DataFrame, docs: DataFrame,
                         nearRecall: Double): DataFrame = {
-    val nNear = docs.filter(col("doc_id") % 5 === 0).agg(count(lit(1)).as("n_near"))
-    val nExact = docs.filter(col("doc_id") % 7 === 0).agg(count(lit(1)).as("n_exact"))
+    // both planted counts in one scan of docs (one aggregate, one broadcast)
+    val planted = docs.agg(
+      count_if(col("doc_id") % 5 === 0).as("n_near"),
+      count_if(col("doc_id") % 7 === 0).as("n_exact"))
     // coalesce: an empty pair frame (total recall collapse) must read
     // as recovered = 0 -> booleans FALSE, not NULL (code-review r11)
     pairs.agg(
@@ -673,7 +675,7 @@ object SparkEntry {
         coalesce(sum(when(col("id_a") % 7 === 0 && col("id_a") < DedupData.ExactIdOffset &&
           col("id_b") === col("id_a") + DedupData.ExactIdOffset, 1L)
           .otherwise(0L)), lit(0L)).as("rec_exact"))
-      .crossJoin(broadcast(nNear)).crossJoin(broadcast(nExact))
+      .crossJoin(broadcast(planted))
       .select(lit(algo).as("algo"), col("n_near"), col("n_exact"),
         (col("rec_near") >= col("n_near") * nearRecall).as("near_recall_ok"),
         (col("rec_exact") === col("n_exact")).as("exact_recall_ok"),
@@ -4596,11 +4598,10 @@ object SparkEntry {
       // character count (hash-checked as a data-derived total), and a
       // longer table never increases the count (the shorter table's
       // fixpoint is an intermediate state of the longer one's run).
-      import s.implicits._
       val docs = t(s, d, "documents")
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 30)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       val toks = TextAnalysis.tokens(col("text"))
       docs.select(
           graft.functions.BpeExprs.encodeCount(toks, table).as("n30"),
@@ -4618,11 +4619,10 @@ object SparkEntry {
       // and encode seed UTF-8 bytes, so the 0-merge count equals the
       // corpus BYTE count (DuckDB strlen) on ANY text, no BMP caveat,
       // and the monotonicity certificate is table-independent.
-      import s.implicits._
       val docs = t(s, d, "documents")
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 30, byteLevel = true)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       val toks = TextAnalysis.tokens(col("text"))
       docs.select(
           graft.functions.BpeExprs.encodeCountBytes(toks, table).as("b30"),
@@ -4644,11 +4644,10 @@ object SparkEntry {
       // pair (SQL replays it with a literal replace — same left-to-right
       // non-overlap as the encoder's single-rule pass); deeper points
       // pin the nested-monotonicity certificate.
-      import s.implicits._
       val docs = t(s, d, "documents")
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 60)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       val toks = TextAnalysis.tokens(col("text"))
       docs.select(
           graft.functions.BpeExprs.encodeCount(toks, Nil).as("n0"),
@@ -4861,11 +4860,10 @@ object SparkEntry {
       // normalization; ONE corpus pass after the bounded pair-stats
       // training job, ratios emitted as exact integer permille — no
       // division, no FP. Fully value-certified.
-      import s.implicits._
       val docs = t(s, d, "documents")
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 1)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       docs.select(col("lang"), col("n_chars"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("ws"),
           graft.functions.BpeExprs.encodeCount(
@@ -4897,11 +4895,10 @@ object SparkEntry {
       // pack chain replays on top of that measure. Fully
       // value-certified: per-doc encoded counts, every bin assignment
       // and the dense global bin ids all recompute in SQL.
-      import s.implicits._
       val docs = t(s, d, "documents")
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 1)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       graft.text.SeqPack.packGreedy(docs, col("doc_id"),
         graft.functions.BpeExprs.encodeCount(TextAnalysis.tokens(col("text")), table),
         budget = 512, groupSize = 64)
@@ -5986,13 +5983,12 @@ object SparkEntry {
       // over BpeEncodeSymbols). Junk that hides INSIDE words still
       // surfaces as rare symbol transitions. Same planted labels, same
       // Adagrad loop, same gate columns as q_quality_classifier.
-      import s.implicits._
       val docs = t(s, d, "documents")
       val neg = DedupData.withPlantedDups(docs)
         .filter(col("doc_id") >= DedupData.NearIdOffset)
-      val table = graft.text.Vocab.bpeMerges(docs, col("doc_id"), col("text"),
+      val table = graft.text.Vocab.bpeMergeTable(docs, col("doc_id"), col("text"),
           topWords = 500, nMerges = 60)
-        .select("left", "right").as[(String, String)].collect().toSeq
+        .map(_.pair)
       val sub: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         tc => graft.functions.BpeExprs.encodeSymbols(TextAnalysis.tokens(tc), table)
       graft.text.QualityClassifier.trainGate(

@@ -77,6 +77,23 @@ object Vocab {
                 byteLevel: Boolean = false): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    bpeMergeTable(docs, id, text, topWords, nMerges, byteLevel).toDF().orderBy("rank")
+  }
+
+  /** One merge rule of [[bpeMergeTable]]. */
+  final case class BpeMerge(rank: Int, left: String, right: String, merged: String, weight: Long) {
+    def pair: (String, String) = (left, right)
+  }
+
+  /** [[bpeMerges]]' rows, rank-ordered, as the driver-side table the loop
+    * builds. The encode consumers take this form: sending the table
+    * through Spark only to collect it back costs a job per stage.
+    */
+  def bpeMergeTable(docs: DataFrame, id: Column, text: Column,
+                    topWords: Int, nMerges: Int,
+                    byteLevel: Boolean = false): Seq[BpeMerge] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     val words: Array[(String, Long)] = topTerms(docs, id, text, topWords)
       .select("term", "n_occ").as[(String, Long)].collect()
 
@@ -104,7 +121,7 @@ object Vocab {
       out.result()
     }
 
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+    val merges = Seq.newBuilder[BpeMerge]
     var rank = 1
     var done = false
     while (rank <= nMerges && !done) {
@@ -121,12 +138,11 @@ object Vocab {
       else {
         val ((l, r), cnt) = counts.toSeq
           .minBy { case ((a, b), n) => (-n, a, b) }
-        merges += ((rank, l, r, l + r, cnt))
+        merges += BpeMerge(rank, l, r, l + r, cnt)
         vocab = vocab.map { case (syms, c) => (mergeWord(syms, l, r), c) }
         rank += 1
       }
     }
-    merges.result().toDF("rank", "left", "right", "merged", "weight")
-      .orderBy("rank")
+    merges.result()
   }
 }

@@ -80,4 +80,18 @@ class SparkEntryContractSpec extends AnyFunSuite {
     assert(sourcesMatching("""read\s*\.\s*parquet\(""".r) === Seq("graft/sources/ParquetSource.scala"),
       "read.parquet( outside ParquetSource.scala — use ParquetSource.read")
   }
+
+  test("no main source starts an operating-system process") {
+    // the stock local filesystem's chmod and readlink forks were most of
+    // a streaming drain's commit time; the program itself starts none
+    assert(sourcesMatching("""ProcessBuilder|sys\.process|Runtime\.getRuntime\.exec""".r) === Nil,
+      "a main source starts a process")
+  }
+
+  test("only GraftSession picks the local filesystem classes") {
+    // a second setting could put the forking stock classes back on a path
+    assert(sourcesMatching(""""(spark\.hadoop\.)?fs\.(AbstractFileSystem\.)?file\.impl"""".r) ===
+      Seq("graft/GraftSession.scala"),
+      "fs.file.impl or fs.AbstractFileSystem.file.impl set outside GraftSession.scala")
+  }
 }
